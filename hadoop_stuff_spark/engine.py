@@ -87,10 +87,12 @@ class Engine:
         return grep_count(self._load(path, fmt), pattern, "value")
 
     def record_count(self, path: str, fmt: str = "chunked") -> DataFrame:
-        """Record count (A1-A4, RecordCount.java): for chunked stores the
-        count comes from per-chunk line counts WITHOUT decompressing
-        payloads (the reference's manual map-side pre-aggregation,
-        RecordCount.java:43, as a metadata aggregate)."""
+        """Record count (A1-A4, RecordCount.java): for chunked stores every
+        chunk is gunzipped and its lines counted map-side, so no per-record
+        rows are made and only one partial sum per task is shuffled (the
+        reference's manual map-side pre-aggregation, RecordCount.java:43).
+        The decode is the cost: it reads and decompresses every payload,
+        like a grep over the same store."""
         if fmt == "chunked":
             return chunked_record_count(self.spark.read.parquet(path))
         return _record_count(self._load(path, fmt))

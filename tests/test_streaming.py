@@ -20,9 +20,11 @@ from hadoop_stuff_spark.streaming.wiretap import (
 )
 
 import pytest
-# full-sweep suite (see pytest.ini): deselected from the default
-# driver-facing run, executed via `pytest tests/ -m "" -q`
-pytestmark = pytest.mark.slow
+
+# Tests marked slow belong to the full-sweep suite (see pytest.ini): they
+# are deselected from the default run and executed via
+# `pytest tests/ -m "" -q`. The unmarked ones cover the wiretap's
+# per-micro-batch delivery path in the default run.
 
 
 class TcpReceiver:
@@ -88,6 +90,7 @@ def _write_log(directory: str, name: str, lines: list[str]) -> None:
         f.write("\n".join(lines) + "\n")
 
 
+@pytest.mark.slow
 def test_parse_subscription_reference_grammar():
     sub = parse_subscription(".*126\\.247\\.0\\.97.* 10.0.0.5:5555", sub_id=9)
     assert sub == {
@@ -103,6 +106,7 @@ def test_parse_subscription_reference_grammar():
     assert sub["proto"] == "udp" and sub["host"] == "10.0.0.6" and sub["port"] == 6666
 
 
+@pytest.mark.slow
 def test_wiretap_routing_and_dynamic_registration(spark, tmp_path):
     logdir = str(tmp_path / "logs")
     ckpt = str(tmp_path / "ckpt")
@@ -130,7 +134,7 @@ def test_wiretap_routing_and_dynamic_registration(spark, tmp_path):
             checkpoint_dir=ckpt,
             trigger_available_now=True,
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
 
         assert r1.received == ["CALL from=17325551212 ip=126.247.0.97 status=OK"]
         assert r2.received == ["CALL from=17325551300 ip=10.1.2.3 status=DROP"]
@@ -158,7 +162,7 @@ def test_wiretap_routing_and_dynamic_registration(spark, tmp_path):
             checkpoint_dir=ckpt,
             trigger_available_now=True,
         )
-        q2.awaitTermination(300)
+        assert q2.awaitTermination(300)
 
         # old file NOT re-delivered (checkpoint state), new records routed,
         # including to the dynamically added subscriber
@@ -171,6 +175,7 @@ def test_wiretap_routing_and_dynamic_registration(spark, tmp_path):
         r3.close()
 
 
+@pytest.mark.slow
 def test_multicast_one_record_many_subscribers(spark, tmp_path):
     logdir = str(tmp_path / "logs")
     os.makedirs(logdir)
@@ -187,7 +192,7 @@ def test_multicast_one_record_many_subscribers(spark, tmp_path):
             get_subscriptions=lambda s: subscriptions_df(s, rows),
             trigger_available_now=True,
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
         assert s1.received == ["ALPHA BETA GAMMA"]
         assert s2.received == ["ALPHA BETA GAMMA"]
         assert s3.received == []
@@ -197,6 +202,7 @@ def test_multicast_one_record_many_subscribers(spark, tmp_path):
         s3.close()
 
 
+@pytest.mark.slow
 def test_route_batch_literal_soak_2k_subscriptions(spark):
     """≥2k-subscription soak (VERDICT r5 #4/#5): the reference's ambition
     is thousands of concurrent wiretap subscribers
@@ -244,6 +250,7 @@ def test_route_batch_literal_soak_2k_subscriptions(spark):
     assert "BatchEvalPython" not in plan
 
 
+@pytest.mark.slow
 def test_route_batch_literal_empty_subscriptions(spark):
     """No subscribers yet must route to an empty frame with the routed
     schema, not crash (reduce() of empty iterable — code review)."""
@@ -262,6 +269,7 @@ def test_route_batch_literal_empty_subscriptions(spark):
     assert out.unionByName(routed).count() == 5
 
 
+@pytest.mark.slow
 def test_real_tcp_delivery_and_dead_subscriber_drop(spark, tmp_path):
     """S7 with a REAL TCP socket + ST4 drop-and-warn: live subscriber gets
     its records over the wire; the dead one is dropped without failing the
@@ -285,7 +293,7 @@ def test_real_tcp_delivery_and_dead_subscriber_drop(spark, tmp_path):
             trigger_available_now=True,
             drop_stats=drops,
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
     finally:
         live.close()
 
@@ -293,6 +301,7 @@ def test_real_tcp_delivery_and_dead_subscriber_drop(spark, tmp_path):
     assert drops == {("127.0.0.1", dead_port): 1}
 
 
+@pytest.mark.slow
 def test_udp_delivery(spark, tmp_path):
     """S7's UDP flavor (RealTimeCdrWiretap.java:59-72 / LoggerTest.java:
     10-19): a udp-proto subscription receives its matches as datagrams while
@@ -314,7 +323,7 @@ def test_udp_delivery(spark, tmp_path):
             get_subscriptions=lambda s: subscriptions_df(s, subs),
             trigger_available_now=True,
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
         # UDP is fire-and-forget but loopback delivery is reliable in
         # practice; give the receiver thread a beat
         import time
@@ -329,6 +338,7 @@ def test_udp_delivery(spark, tmp_path):
         tcp.close()
 
 
+@pytest.mark.slow
 def test_grep_to_wiretap_batch_stream_bridge(spark):
     """The reference's commented-out batch→stream bridge, demonstrated end
     to end (DistributedGrep.java:33,38-47,57: grep matches pushed to the
@@ -367,6 +377,7 @@ def test_grep_to_wiretap_batch_stream_bridge(spark):
     assert drops == {("127.0.0.1", dead_port): 1}
 
 
+@pytest.mark.slow
 def test_route_batch_strategies_agree(spark):
     """Unified matcher entry point (PLAN_r7 #3): route_batch's default
     literal strategy and the column-regex join escape hatch must return
@@ -405,3 +416,97 @@ def test_route_batch_strategies_agree(spark):
 
     with pytest.raises(ValueError, match="strategy"):
         route_batch(batch, subs, strategy="bogus")
+
+
+def test_subscriptions_df_is_a_driver_local_relation(spark):
+    """The wiretap re-reads the subscriptions table every micro-batch, so
+    building and collecting it must run no Spark job: the table plans as a
+    LocalTableScan (never Scan ExistingRDD), with or without Arrow enabled
+    for pandas conversion, and also when it is empty."""
+    from hadoop_stuff_spark.streaming.wiretap import SUBSCRIPTION_SCHEMA
+
+    rows = [
+        {"sub_id": 1, "regex": "^CALL", "host": "h1", "port": 10},
+        {"sub_id": 2, "regex": "FLOW", "host": "h2", "port": 20, "proto": "udp"},
+    ]
+    expected = [(1, "^CALL", "h1", 10, "tcp"), (2, "FLOW", "h2", 20, "udp")]
+    sc = spark.sparkContext
+    arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(arrow_conf)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(arrow_conf, arrow)
+            for subs, want in ((rows, expected), ([], [])):
+                group = f"subs-{arrow}-{len(subs)}"
+                sc.setJobGroup(group, group)
+                try:
+                    df = subscriptions_df(spark, subs)
+                    got = [tuple(r) for r in df.collect()]
+                finally:
+                    sc._jsc.clearJobGroup()
+                assert sc.statusTracker().getJobIdsForGroup(group) == []
+                assert got == want
+                assert df.schema == SUBSCRIPTION_SCHEMA
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    finally:
+        spark.conf.set(arrow_conf, saved)
+
+
+def test_deliver_routed_multi_partition_exactly_once_without_shuffle(spark, monkeypatch):
+    """Delivery runs in the routing tasks: a 3-partition routed frame goes
+    out with no Exchange in the executed plan, every matched record reaches
+    each of its subscribers exactly once (a record matching two
+    subscriptions goes to both), and the dead port's records are dropped
+    and tallied per (host, port) — ST4 — without failing the call."""
+    from pyspark.sql import functions as F
+
+    from hadoop_stuff_spark.streaming.wiretap import deliver_routed, route_batch_literal
+
+    n = 60
+    tags = ["A", "B", "C"]
+    batch = spark.range(0, n, 1, numPartitions=3).select(
+        F.concat(
+            F.lit("rec "), F.col("id").cast("string"), F.lit(" "),
+            F.element_at(F.array(*map(F.lit, tags)), (F.col("id") % 3 + 1).cast("int")),
+        ).alias("value")
+    )
+    # record the executed plan of every frame handed to foreachPartition
+    plans = []
+    frame_cls = type(batch)
+    original = frame_cls.foreachPartition
+
+    def spy(self, f):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return original(self, f)
+
+    monkeypatch.setattr(frame_cls, "foreachPartition", spy)
+    a, b = TcpReceiver(), TcpReceiver()
+    dead_port = _free_port()
+    subs = [
+        {"sub_id": 1, "regex": " A$", "host": "127.0.0.1", "port": a.port, "proto": "tcp"},
+        {"sub_id": 2, "regex": " [AB]$", "host": "127.0.0.1", "port": b.port, "proto": "tcp"},
+        {"sub_id": 3, "regex": " C$", "host": "127.0.0.1", "port": dead_port, "proto": "tcp"},
+    ]
+    want_a = sorted(f"rec {i} A" for i in range(n) if i % 3 == 0)
+    want_b = sorted(f"rec {i} {tags[i % 3]}" for i in range(n) if i % 3 < 2)
+    drops: dict = {}
+    try:
+        routed = route_batch_literal(batch, subs)
+        assert routed.rdd.getNumPartitions() == 3
+        deliver_routed(routed, drop_stats=drops)
+        import time
+
+        deadline = time.time() + 10
+        while time.time() < deadline and (
+            len(a.received) < len(want_a) or len(b.received) < len(want_b)
+        ):
+            time.sleep(0.05)
+    finally:
+        a.close()
+        b.close()
+
+    assert sorted(a.received) == want_a
+    assert sorted(b.received) == want_b
+    assert drops == {("127.0.0.1", dead_port): n // 3}
+    assert len(plans) == 1 and "Exchange" not in plans[0], plans
